@@ -6,9 +6,9 @@ Mirrors the reference's contract (reference: Runner.java:39-103):
 * <input> is a directory (recursively discovers `*-Data.db`) or a single
   Data.db file; bad arg count / missing path exit non-zero with usage
   (Runner.java:42-53).
-* Each SSTable's live rows are written as `<name>-Data.db.proto.zst`
-  (varint-delimited protobuf Rows, zstd stream) into <output_dir>
-  (Runner.java:71, 147-156).
+* Each SSTable's live rows are written as one varint-delimited protobuf
+  Row stream, zstd-compressed, into <output_dir> (Runner.java:71,
+  147-156; file naming lives in sources/sstable_pb.py).
 * Per-file metrics print on completion: rows, cells, source/target
   bytes, bytes saved, seconds (Runner.java:88-96).
 
@@ -91,7 +91,7 @@ def convert(input_path: str, output_dir: str,
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
         read_native_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        write_cells_pb)
+        write_cells_pb, write_empty_pb)
 
     spark = get_spark("sstable-to-protobuf-convert")
     spark.sparkContext.setLogLevel("ERROR")
@@ -108,8 +108,8 @@ def convert(input_path: str, output_dir: str,
             os.path.join(input_path, "**", "*-Data.db"), recursive=True))
     else:
         inputs = [input_path]
-    # metrics and outputs are keyed by sstable_id (basename sans -Data.db,
-    # flat `<id>-Data.db.proto.zst` like the reference's), so two nested
+    # metrics and outputs are keyed by sstable_id (basename sans -Data.db;
+    # the sink names outputs flat by it, like the reference), so two nested
     # inputs sharing a basename would merge in the sink -- refuse up front.
     id_to_path: dict[str, str] = {}
     for data_path in inputs:
@@ -144,35 +144,23 @@ def convert(input_path: str, output_dir: str,
         F.lit(None).cast("boolean").alias("ttl_expired"),
         "partition_deletion_live",
     )
-    metrics = write_cells_pb(cells, output_dir).collect()
+    metrics = [m.asDict() for m in write_cells_pb(cells, output_dir).collect()]
 
     # parity: the reference opens an output stream per input file even
     # when every partition is dead (Runner.java:75-82) -- emit empty
-    # .proto.zst files for inputs that produced no live rows
-    import pyarrow as pa
+    # outputs for inputs that produced no live rows
+    produced = {m["sstable_id"] for m in metrics}
+    metrics += [write_empty_pb(output_dir, sid)
+                for sid in id_to_path if sid not in produced]
 
-    produced = {m.sstable_id for m in metrics}
     total_saved = 0
-    for data_path in inputs:
-        sstable_id = os.path.basename(data_path)[:-len("-Data.db")]
-        if sstable_id not in produced:
-            empty = os.path.join(output_dir, f"{sstable_id}-Data.db.proto.zst")
-            with pa.output_stream(empty, compression=None) as raw, \
-                    pa.CompressedOutputStream(raw, "zstd"):
-                pass
-            src = os.path.getsize(data_path)
-            total_saved += src - os.path.getsize(empty)
-            print(f"{sstable_id}: rows=0 cells=0 source={src}B "
-                  f"target={os.path.getsize(empty)}B "
-                  f"saved={src - os.path.getsize(empty)}B seconds=0.000")
-
-    for m in sorted(metrics, key=lambda m: m.sstable_id):
-        src = os.path.getsize(id_to_path[m.sstable_id])
-        saved = src - m.compressed_bytes
+    for m in sorted(metrics, key=lambda m: m["sstable_id"]):
+        src = os.path.getsize(id_to_path[m["sstable_id"]])
+        saved = src - m["compressed_bytes"]
         total_saved += saved
-        print(f"{m.sstable_id}: rows={m.n_rows} cells={m.n_cells} "
-              f"source={src}B target={m.compressed_bytes}B saved={saved}B "
-              f"seconds={m.seconds}")
+        print(f"{m['sstable_id']}: rows={m['n_rows']} cells={m['n_cells']} "
+              f"source={src}B target={m['compressed_bytes']}B "
+              f"saved={saved}B seconds={m['seconds']}")
     print(f"converted {len(inputs)} sstable(s), total bytes saved: {total_saved}")
     return 0
 

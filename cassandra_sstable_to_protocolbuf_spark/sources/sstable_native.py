@@ -3250,10 +3250,11 @@ class SSTableNativeReader(DataSourceReader):
                        str(e)[:500].encode(), 0, "ERROR", None, None, False)
 
         if (not self.permissive and split is not None
-                and not getattr(split, "error", None)
-                and self._fast_scan_eligible(split)):
+                and not getattr(split, "error", None)):
             # vectorized batch decode (cellcodec): same rows, same
-            # order, ~2.5x the per-task throughput of the tuple path.
+            # order, ~2.5x the per-task throughput of the tuple path;
+            # both row framings qualify (decode_partitions handles the
+            # pre-'ja' ka framing via old_format).
             # PERMISSIVE stays on the scalar path: its good-prefix
             # contract is PER-CELL (rows parsed before the corrupt
             # byte stand), which a block decoder cannot reproduce --
@@ -3297,16 +3298,6 @@ class SSTableNativeReader(DataSourceReader):
     # hands the split's remainder back to the O(cell) streaming path
     FAST_SCAN_PARTITION_CAP = 64 << 20
     FAST_SCAN_GROW = 4 << 20
-
-    def _fast_scan_eligible(self, split) -> bool:
-        """Plain byte-range splits that pass this check vectorize
-        through _read_fast; name_range (clustering slice) splits pass
-        through it too and dispatch to _read_fast_sliced (VERDICT r8
-        #3). Both row framings qualify: decode_partitions handles the
-        pre-'ja' (ka) framing via old_format -- the foreign-ka point
-        and scan legs used to run the scalar tuple walk at roughly
-        half the vectorized throughput."""
-        return True
 
     @staticmethod
     def _old_format(data_path: str) -> bool:

@@ -9,6 +9,7 @@ over a nested fixture tree and pins:
 * metrics line printed for every input file (nested or not),
 * empty `.proto.zst` emitted for nested dead-partition inputs
   (Runner.java:75-82 opens an output stream even when nothing is live),
+  published atomically (no temp leftovers) and readable as zero Rows,
 * exit code 0.
 """
 
@@ -19,6 +20,7 @@ import subprocess
 import sys
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import read_rows_pb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -30,7 +32,7 @@ def _run(*args, timeout=600):
         capture_output=True, text=True, timeout=timeout, env=env, cwd="/tmp")
 
 
-def test_convert_nested_tree(tmp_path):
+def test_convert_nested_tree(spark, tmp_path):
     src = str(tmp_path / "in")
     live = [{"key": b"k1", "cells": [
         {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}]
@@ -56,6 +58,14 @@ def test_convert_nested_tree(tmp_path):
         os.path.join(out, "ks-events-ka-2-Data.db.proto.zst"))
     assert os.path.getsize(
         os.path.join(out, "ks-cf-ka-3-Data.db.proto.zst")) > 0
+    # exactly one published file per input, no temp leftovers
+    assert sorted(os.listdir(out)) == [
+        "ks-cf-ka-3-Data.db.proto.zst", "ks-events-ka-2-Data.db.proto.zst",
+        "ks-users-ka-1-Data.db.proto.zst"]
+    # the dead input's file is a valid stream holding zero Rows
+    assert read_rows_pb(
+        spark, os.path.join(out, "ks-events-ka-2-Data.db.proto.zst")
+    ).count() == 0
 
 
 def test_convert_duplicate_basenames_refused(tmp_path):

@@ -75,71 +75,99 @@ def test_iter_delimited_truncated():
         list(pw.iter_delimited(io.BytesIO(framed[:50])))
 
 
+def _expected_streams(cells) -> dict:
+    """Independent reference for the sink, in plain Python over the
+    collected cells: {sstable_id: [(key, [(name, value, writeTime)])]}
+    for LIVE partitions only, keys in byte order, each row's LIVE cells
+    in sort_array's struct order (name, then value with NULL first, then
+    writeTime). A partition whose cells are all dead keeps an empty Row."""
+    rows: dict = {}
+    for c in cells:
+        if not c.partition_deletion_live:
+            continue
+        cols = rows.setdefault((c.sstable_id, bytes(c.key)), [])
+        if c.cell_kind == "LIVE":
+            v = None if c.value is None else bytes(c.value)
+            cols.append((bytes(c.name), v, c.writeTime))
+    out: dict = {}
+    for (sid, key) in sorted(rows):
+        cols = sorted(rows[(sid, key)],
+                      key=lambda t: (t[0], t[1] is not None, t[1] or b"", t[2]))
+        out.setdefault(sid, []).append((key, cols))
+    return out
+
+
+def _assert_sink_matches(out_dir, metrics, cells) -> dict:
+    """Every output file, zstd-decompressed, equals the scalar
+    frame_row(encode_row(...)) bytes of the expected rows; the file set
+    and the metrics agree with them too. Returns the expected rows."""
+    import os
+
+    import pyarrow as pa
+
+    expected = _expected_streams(cells)
+    assert sorted(os.listdir(out_dir)) == sorted(
+        f"{sid}-Data.db.proto.zst" for sid in expected)
+    assert sorted(m.sstable_id for m in metrics) == sorted(expected)
+    by_sid = {m.sstable_id: m for m in metrics}
+    for sid, rows in expected.items():
+        want = b"".join(pw.frame_row(pw.encode_row(k, cs)) for k, cs in rows)
+        path = os.path.join(out_dir, f"{sid}-Data.db.proto.zst")
+        with pa.input_stream(path, compression="zstd") as f:
+            got = f.read()
+        assert got == want, f"bytes differ: {sid}"
+        m = by_sid[sid]
+        assert m.path == path
+        assert (m.n_rows, m.n_cells, m.raw_bytes, m.compressed_bytes) == (
+            len(rows), sum(len(cs) for _, cs in rows), len(want),
+            os.path.getsize(path))
+    return expected
+
+
 def test_write_read_roundtrip(spark, tmp_path):
-    """Full pipeline: cells -> live filter -> nested rows -> pb+zstd files
-    -> DataSource read-back == what was written."""
+    """Full pipeline: cells -> live filter -> Rows -> pb+zstd files (each
+    equal to the plain-Python reference's bytes) -> DataSource read-back
+    == the reference rows."""
     from cassandra_sstable_to_protocolbuf_spark.sources.cells import (
         encode_lineitem_cells, to_binary_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        nested_rows_from_cells, read_rows_pb, write_rows_pb)
+        read_rows_pb, write_cells_pb)
     from tests.conftest import SF_SMOKE
 
     cells = to_binary_cells(encode_lineitem_cells(spark, SF_SMOKE))
-    nested = nested_rows_from_cells(cells)
     out = str(tmp_path / "pb_out")
-    metrics = write_rows_pb(nested, out).collect()
+    metrics = write_cells_pb(cells, out).collect()
     assert len(metrics) == 5  # sst-0..3 + sst-r
     assert all(m.n_rows > 0 and m.compressed_bytes > 0 for m in metrics)
+    expected = _assert_sink_matches(out, metrics, cells.collect())
 
     # files are real zstd streams (magic 28 B5 2F FD)
     with open(metrics[0].path, "rb") as f:
         assert f.read(4) == bytes.fromhex("28b52ffd")
 
-    back = read_rows_pb(spark, out)
-    a = nested.selectExpr("sstable_id", "key",
-                          "transform(columns, c -> struct(c.name, coalesce(c.value, cast('' as binary)) as value, c.writeTime)) as columns")
-    b = back.select("sstable_id", "key", "columns")
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def _files_bytes(d):
-    import os
-
-    out = {}
-    for name in sorted(os.listdir(d)):
-        with open(os.path.join(d, name), "rb") as f:
-            out[name] = f.read()
-    return out
+    back = sorted(
+        (r.sstable_id, bytes(r.key),
+         [(bytes(c.name), bytes(c.value), c.writeTime) for c in r.columns])
+        for r in read_rows_pb(spark, out).collect())
+    assert back == sorted(
+        (sid, k, [(n, v or b"", t) for n, v, t in cs])
+        for sid, rows in expected.items() for k, cs in rows)
 
 
 def test_flat_writer_golden_equality(spark, tmp_path):
-    """write_cells_pb (one-exchange fold-adjacent-runs writer) must be
-    BYTE-IDENTICAL to the nested collect_list + second-exchange path it
-    replaced, file for file, on the real cells fixture -- plus matching
-    metrics (all but the wall-clock column)."""
+    """write_cells_pb on the real cells fixture: every file is
+    byte-identical to the plain-Python reference rows encoded with the
+    scalar codec, and the metrics count exactly those rows and bytes."""
     from cassandra_sstable_to_protocolbuf_spark.sources.cells import (
         encode_lineitem_cells, to_binary_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        nested_rows_from_cells, write_cells_pb, write_rows_pb)
+        write_cells_pb)
     from tests.conftest import SF_SMOKE
 
     cells = to_binary_cells(encode_lineitem_cells(spark, SF_SMOKE))
-    old_dir, new_dir = str(tmp_path / "old"), str(tmp_path / "new")
-    m_old = write_rows_pb(nested_rows_from_cells(cells), old_dir).collect()
-    m_new = write_cells_pb(cells, new_dir).collect()
-
-    old_files, new_files = _files_bytes(old_dir), _files_bytes(new_dir)
-    assert list(old_files) == list(new_files)
-    for name in old_files:
-        assert old_files[name] == new_files[name], f"bytes differ: {name}"
-
-    strip = [(m.sstable_id, m.n_rows, m.n_cells, m.raw_bytes,
-              m.compressed_bytes) for m in m_old]
-    assert sorted(strip) == sorted(
-        (m.sstable_id, m.n_rows, m.n_cells, m.raw_bytes,
-         m.compressed_bytes) for m in m_new)
+    out = str(tmp_path / "new")
+    metrics = write_cells_pb(cells, out).collect()
+    _assert_sink_matches(out, metrics, cells.collect())
 
 
 def test_flat_writer_runs_span_arrow_batches(spark, tmp_path):
@@ -147,9 +175,9 @@ def test_flat_writer_runs_span_arrow_batches(spark, tmp_path):
     longer than one Arrow batch (pending-row accumulation across
     batches), an all-dead-cells key (must still emit its Row, empty), a
     dead PARTITION (must vanish), NULL values and writeTime 0 -- all at a
-    tiny forced batch size, against the nested path's bytes."""
+    tiny forced batch size, against the plain-Python reference's bytes."""
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        nested_rows_from_cells, write_cells_pb, write_rows_pb)
+        write_cells_pb)
 
     rows = []
     # wide run: 100 cells for one key (batch size forced to 7 below)
@@ -167,6 +195,9 @@ def test_flat_writer_runs_span_arrow_batches(spark, tmp_path):
     for i in range(4):
         rows.append(("wide", b"k-gone", b"f%02d" % i, b"z",
                      8, "LIVE", False, False))
+    # same name under one key: value orders NULL first, then writeTime
+    for v, t in ((b"b", 5), (None, 9), (b"a", 3), (b"a", 1)):
+        rows.append(("wide", b"k-ties", b"same", v, t, "LIVE", False, True))
     # second sstable in the same stream (file roll mid-task possible)
     rows.append(("tiny", b"a", b"n", b"v", 1, "LIVE", False, True))
     cells = spark.createDataFrame(
@@ -177,25 +208,26 @@ def test_flat_writer_runs_span_arrow_batches(spark, tmp_path):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        old_dir, new_dir = str(tmp_path / "old"), str(tmp_path / "new")
-        write_rows_pb(nested_rows_from_cells(cells), old_dir).collect()
-        m = {r.sstable_id: r for r in write_cells_pb(cells, new_dir).collect()}
+        out = str(tmp_path / "new")
+        metrics = write_cells_pb(cells, out).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
-    old_files, new_files = _files_bytes(old_dir), _files_bytes(new_dir)
-    assert list(old_files) == list(new_files)
-    for name in old_files:
-        assert old_files[name] == new_files[name], f"bytes differ: {name}"
+    expected = _assert_sink_matches(out, metrics, cells.collect())
     # the all-dead key still occupies a Row; the dead partition does not
-    assert m["wide"].n_rows == 3
-    assert m["wide"].n_cells == 100 + 5
+    wide = dict(expected["wide"])
+    assert wide[b"k-alldead"] == [] and b"k-gone" not in wide
+    assert wide[b"k-ties"] == [(b"same", None, 9), (b"same", b"a", 1),
+                               (b"same", b"a", 3), (b"same", b"b", 5)]
+    m = {r.sstable_id: r for r in metrics}
+    assert m["wide"].n_rows == 4
+    assert m["wide"].n_cells == 100 + 5 + 4
     assert m["tiny"].n_rows == 1
 
 
 def test_flat_writer_wide_row_cap(spark, tmp_path):
-    """A run wider than max_cells fails loudly (same contract as
-    guard_row_width), not by exhausting executor memory."""
+    """A run wider than max_cells fails loudly, not by exhausting
+    executor memory."""
     import pyarrow as pa
 
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
@@ -218,16 +250,18 @@ def test_flat_writer_wide_row_cap(spark, tmp_path):
 
 
 def test_read_keys_sorted_within_file(spark, tmp_path):
-    """Sink writes rows in key-byte order (token-order analog)."""
+    """Sink writes rows in key-byte order (token-order analog), as the
+    reader sees them and byte for byte against the reference."""
     from cassandra_sstable_to_protocolbuf_spark.sources.cells import (
         encode_lineitem_cells, to_binary_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        SSTablePbReader, nested_rows_from_cells, write_rows_pb)
+        SSTablePbReader, write_cells_pb)
     from tests.conftest import SF_SMOKE
 
     cells = to_binary_cells(encode_lineitem_cells(spark, SF_SMOKE))
     out = str(tmp_path / "pb_sorted")
-    write_rows_pb(nested_rows_from_cells(cells), out).collect()
+    metrics = write_cells_pb(cells, out).collect()
+    _assert_sink_matches(out, metrics, cells.collect())
     reader = SSTablePbReader(out)
     part = reader.partitions()[0]
     keys = [k for batch in reader.read(part)

@@ -139,12 +139,21 @@ def test_int32_overflow_guards_raise_instead_of_wrapping():
                     np.array([8], dtype=np.int64))
 
 
+def _bufs(items):
+    """(concatenated uint8 payload, int64 lengths): the buffer form
+    encode_rows_block_bufs takes for each variable-length field."""
+    import numpy as np
+
+    return (np.frombuffer(b"".join(items), dtype=np.uint8),
+            np.fromiter(map(len, items), dtype=np.int64, count=len(items)))
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.lists(row, max_size=12))
 def test_block_encoder_byte_identical(rows):
-    """encode_rows_block == per-row frame_row(encode_row(...)) for any
-    shape hypothesis can draw: empty keys, empty names/values, zero and
-    negative writeTimes, zero-column rows, varint-size boundaries."""
+    """encode_rows_block_bufs == per-row frame_row(encode_row(...)) for
+    any shape hypothesis can draw: empty keys, empty names/values, zero
+    and negative writeTimes, zero-column rows, varint-size boundaries."""
     import numpy as np
 
     ref = b"".join(pw.frame_row(pw.encode_row(k, cs)) for k, cs in rows)
@@ -155,4 +164,5 @@ def test_block_encoder_byte_identical(rows):
             for _, cs in rows for (_n, v, _t) in cs]
     wts = np.array([t for _, cs in rows for (_n, _v, t) in cs],
                    dtype=np.int64)
-    assert pw.encode_rows_block(keys, counts, names, vals, wts) == ref
+    assert pw.encode_rows_block_bufs(*_bufs(keys), counts, *_bufs(names),
+                                     *_bufs(vals), wts) == ref

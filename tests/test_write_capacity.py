@@ -145,24 +145,33 @@ def test_pb_sink_throughput_floor(capsys):
 
 def test_pb_block_throughput_floor(capsys):
     """The vectorized protobuf block framer (the sink's actual r8 hot
-    path): ~1.27M cells/s idle on the 4-cell shape; floor at ~1/4."""
+    path), fed the concatenated-payload + lengths buffers an Arrow
+    Binary column already is: ~1.27M cells/s idle on the 4-cell shape;
+    floor at ~1/4."""
+    import io as _io
+
+    import pyarrow as pa
+
     from cassandra_sstable_to_protocolbuf_spark import protowire as pw
 
+    def bufs(items):
+        return (np.frombuffer(b"".join(items), dtype=np.uint8),
+                np.fromiter(map(len, items), dtype=np.int64,
+                            count=len(items)))
+
     n_cells = 200_000
-    keys = [b"key-%07d" % i for i in range(n_cells // 4)]
+    keys = bufs([b"key-%07d" % i for i in range(n_cells // 4)])
     counts = np.full(n_cells // 4, 4, np.int64)
-    names = [b"col%d" % (c % 4) for c in range(n_cells)]
-    vals = [b"value-%07d-%d" % (i // 4, i % 4) for i in range(n_cells)]
+    names = bufs([b"col%d" % (c % 4) for c in range(n_cells)])
+    vals = bufs([b"value-%07d-%d" % (i // 4, i % 4) for i in range(n_cells)])
     wts = np.arange(n_cells, dtype=np.int64) * 10
     best = 0.0
     for _ in range(2):
         t0 = time.monotonic()
-        import io as _io
-
-        import pyarrow as pa
         sink = _io.BytesIO()
         with pa.CompressedOutputStream(pa.output_stream(sink), "zstd") as z:
-            z.write(pw.encode_rows_block(keys, counts, names, vals, wts))
+            z.write(pw.encode_rows_block_bufs(*keys, counts, *names, *vals,
+                                              wts))
         best = max(best, n_cells / (time.monotonic() - t0))
     with capsys.disabled():
         print(f"\n[capacity] pb+zstd block sink {best:,.0f} cells/s "

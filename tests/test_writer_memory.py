@@ -2,8 +2,9 @@
 memory, never O(file) (round-4 verdict: the applyInPandas shapes held a
 whole sstable per task -- the one scale-killer class found that round).
 
-These call the mapInPandas stream-writer functions DIRECTLY with a lazy
-generator of small pandas batches simulating one very large sstable, and
+These call the stream-writer functions DIRECTLY (the protobuf sink's
+mapInArrow writer, the native sink's mapInPandas writer) with a lazy
+generator of small batches simulating one very large sstable, and
 tracemalloc-pin peak Python allocation to a few MB while the encoded
 output is tens of MB -- the writer mirror of the reader pin in
 tests/test_sstable_native.py (test_wide_partition_streams_per_cell).
@@ -15,6 +16,7 @@ import os
 import tracemalloc
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark import protowire
@@ -24,75 +26,103 @@ from cassandra_sstable_to_protocolbuf_spark.sources import sstable_pb as PB
 PIN_BYTES = 8 * 1024 * 1024  # generous vs the ~40 MB streamed through
 
 
+PB_SCHEMA = pa.schema([("sstable_id", pa.string()), ("key", pa.binary()),
+                       ("live", pa.bool_()), ("name", pa.binary()),
+                       ("value", pa.binary()), ("writeTime", pa.int64())])
+
+
+def _pb_batch(rows):
+    """One flat-cell Arrow batch in the shape write_cells_pb feeds its
+    writer: (sstable_id, key, live, name, value, writeTime) tuples."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(zip(*rows), PB_SCHEMA)],
+        schema=PB_SCHEMA)
+
+
+def _pb_run(out_dir, batches) -> list[dict]:
+    return pa.Table.from_batches(
+        list(PB._pb_flat_stream_writer(str(out_dir))(batches))).to_pylist()
+
+
+def _pb_read(path) -> list:
+    with pa.input_stream(path, compression="zstd") as f:
+        return [protowire.decode_row(body)
+                for body in protowire.iter_delimited(f)]
+
+
 def test_pb_sink_streams_per_batch(tmp_path):
-    """One 40 MB sstable through the protobuf+zstd sink: peak Python
-    allocation stays O(one batch), and the streamed file decodes back to
-    every frame (the pin must not pass by writing garbage)."""
+    """One 40 MB sstable through the protobuf+zstd sink's production
+    writer: peak allocation stays O(one batch) -- Python objects via
+    tracemalloc, and the Arrow buffers (invisible to tracemalloc) via
+    the Arrow pool's live bytes at every batch pull -- and the streamed
+    file decodes back to every frame (the pin must not pass by writing
+    garbage)."""
     n_batches, rows_per_batch, val = 100, 200, b"v" * 2000  # ~40 MB
+    arrow_peak = 0
 
     def batches():
-        row_no = 0
-        for _ in range(n_batches):
-            rows = []
-            for _ in range(rows_per_batch):
-                rows.append({
-                    "sstable_id": "big",
-                    "key": b"k%010d" % row_no,
-                    "columns": [{"name": b"c1", "value": val,
-                                 "writeTime": row_no}],
-                })
-                row_no += 1
-            yield pd.DataFrame(rows)
+        nonlocal arrow_peak
+        for b in range(n_batches):
+            arrow_peak = max(arrow_peak, pa.total_allocated_bytes())
+            lo = b * rows_per_batch
+            yield _pb_batch([("big", b"k%010d" % i, True, b"c1", val, i)
+                             for i in range(lo, lo + rows_per_batch)])
 
-    write = PB._pb_stream_writer(str(tmp_path))
+    # the first call pays one-time import/codec allocations (~20 MB);
+    # pin the steady state
+    _pb_run(tmp_path, iter([_pb_batch(
+        [("warm", b"k", True, b"c1", b"v", 1)])]))
     tracemalloc.start()
-    metrics = pd.concat(list(write(batches())), ignore_index=True)
+    metrics = _pb_run(tmp_path, batches())
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
 
     assert peak < PIN_BYTES, f"peak {peak} bytes: file buffered in task?"
+    assert arrow_peak < PIN_BYTES, \
+        f"{arrow_peak} Arrow bytes live: batches buffered in task?"
     assert len(metrics) == 1
-    assert metrics["n_rows"].iloc[0] == n_batches * rows_per_batch
-    assert metrics["raw_bytes"].iloc[0] > 40_000_000
+    assert metrics[0]["n_rows"] == n_batches * rows_per_batch
+    assert metrics[0]["raw_bytes"] > 40_000_000
 
     # decode back: frame count matches, keys arrive in written order
-    import pyarrow as pa
-
-    path = metrics["path"].iloc[0]
     n = 0
-    with pa.input_stream(path, compression="zstd") as f:
+    with pa.input_stream(metrics[0]["path"], compression="zstd") as f:
         for body in protowire.iter_delimited(f):
             key, cols = protowire.decode_row(body)
             assert key == b"k%010d" % n
-            assert len(cols) == 1
+            assert cols == [(b"c1", val, n)]
             n += 1
     assert n == n_batches * rows_per_batch
 
 
 def test_pb_sink_rolls_files_on_sstable_change(tmp_path):
     """Several sstables inside one sorted stream -> one file + one
-    metrics row each, regardless of batch boundaries."""
+    metrics row each, regardless of batch boundaries: a row spanning two
+    batches, an all-dead row kept empty, and two file rolls in one
+    batch."""
     def batches():
-        # sst-a spans two batches; sst-b and sst-c share one batch
-        yield pd.DataFrame([
-            {"sstable_id": "sst-a", "key": b"a1",
-             "columns": [{"name": b"n", "value": b"x", "writeTime": 1}]},
-        ])
-        yield pd.DataFrame([
-            {"sstable_id": "sst-a", "key": b"a2", "columns": []},
-            {"sstable_id": "sst-b", "key": b"b1",
-             "columns": [{"name": b"n", "value": None, "writeTime": 2}]},
-            {"sstable_id": "sst-c", "key": b"c1",
-             "columns": [{"name": b"n", "value": b"y", "writeTime": 3}]},
-        ])
+        # sst-a's key a2 spans both batches; sst-b and sst-c share one
+        yield _pb_batch([("sst-a", b"a1", True, b"n", b"x", 1),
+                         ("sst-a", b"a2", True, b"m", b"y", 4)])
+        yield _pb_batch([("sst-a", b"a2", True, b"n", b"z", 5),
+                         ("sst-a", b"a3", False, None, None, 0),
+                         ("sst-b", b"b1", True, b"n", None, 2),
+                         ("sst-c", b"c1", True, b"n", b"y", 3)])
 
-    out = pd.concat(list(PB._pb_stream_writer(str(tmp_path))(batches())),
-                    ignore_index=True)
-    assert list(out["sstable_id"]) == ["sst-a", "sst-b", "sst-c"]
-    assert list(out["n_rows"]) == [2, 1, 1]
+    out = _pb_run(tmp_path, batches())
+    assert [m["sstable_id"] for m in out] == ["sst-a", "sst-b", "sst-c"]
+    assert [m["n_rows"] for m in out] == [3, 1, 1]
     assert sorted(os.listdir(tmp_path)) == [
         "sst-a-Data.db.proto.zst", "sst-b-Data.db.proto.zst",
         "sst-c-Data.db.proto.zst"]
+    rows = {m["sstable_id"]: _pb_read(m["path"]) for m in out}
+    assert rows == {
+        "sst-a": [(b"a1", [(b"n", b"x", 1)]),
+                  (b"a2", [(b"m", b"y", 4), (b"n", b"z", 5)]),
+                  (b"a3", [])],
+        "sst-b": [(b"b1", [(b"n", b"", 2)])],
+        "sst-c": [(b"c1", [(b"n", b"y", 3)])],
+    }
 
 
 def _cell_batches(n_batches, cells_per_batch, val, sstable_id="big",
@@ -225,27 +255,6 @@ def test_stream_writer_abort_leaves_no_temp_files(tmp_path):
     w.add_cell(b"c", "LIVE", 1, b"v")
     w.abort()
     assert os.listdir(tmp_path) == []
-
-
-def test_group_rows_wide_partition_guard(spark):
-    """P2's nested-Row cap: a partition wider than max_cells fails with
-    the documented loud error (never a silent executor OOM); under the
-    cap the same data encodes normally."""
-    from pyspark.sql.utils import AnalysisException  # noqa: F401
-
-    from cassandra_sstable_to_protocolbuf_spark.operators.projection import (
-        group_rows)
-
-    rows = [("s1", b"wide", b"c%02d" % i, b"v", i) for i in range(10)]
-    cells = spark.createDataFrame(
-        rows, "sstable_id string, key binary, name binary, value binary, "
-              "writeTime long")
-
-    ok = group_rows(cells, max_cells=10).collect()
-    assert len(ok) == 1 and len(ok[0]["columns"]) == 10
-
-    with pytest.raises(Exception, match="nested-Row cap"):
-        group_rows(cells, max_cells=9).collect()
 
 
 def test_native_sink_rejects_inconsistent_partition_flag(tmp_path):
